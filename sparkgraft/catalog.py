@@ -29,7 +29,7 @@ import math
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
@@ -188,35 +188,24 @@ def read_spec_evolved(spark: SparkSession, path: str, spec: TableSpec) -> DataFr
     return read_evolved(spark, path, spec.schema, history=history)
 
 
-def sweep_stale_staging(
-    spark: SparkSession, table_name: str, horizon_s: float = 3600.0
-) -> list[str]:
-    """Drop orphaned ``temp_<table>_<ns>`` staging tables older than
-    ``horizon_s`` — the recovery for a driver killed between
-    ``load_overwrite``'s staging write and its ``finally`` drop (the
-    reference has the same hole: HiveConnector.scala:37-56 drops staging
-    only on the happy path).
-
-    The creation timestamp is IN the name (``time.time_ns()`` suffix), so
-    age needs no filesystem stat: anything past the horizon is debris —
-    a live load younger than the horizon is never touched, same
-    quiet-window contract as ``sweep_stale_temporary``.  Matching is
-    anchored to this table's exact ``temp_{flat}_<digits>`` shape;
-    another table's staging (or a user table that merely starts with
-    ``temp_``) never matches."""
-    return _sweep_staging_from(
-        spark, table_name, _list_table_names(spark), horizon_s
-    )
-
-
 def _sweep_staging_from(
     spark: SparkSession,
     table_name: str,
     names: list[str],
     horizon_s: float = 3600.0,
 ) -> list[str]:
-    """The sweep body over an already-fetched table listing, so callers
-    holding a listing (ensure_table) don't pay a second metastore trip."""
+    """Drop orphaned ``temp_<table>_<ns>`` staging tables older than
+    ``horizon_s`` from an already-fetched table listing (ensure_table's,
+    so the sweep costs no second metastore trip) — the recovery for a
+    driver killed between ``load_overwrite``'s staging write and its
+    ``finally`` drop (the reference has the same hole:
+    HiveConnector.scala:37-56 drops staging only on the happy path).
+
+    The creation timestamp is IN the name (``time.time_ns()`` suffix), so
+    age needs no filesystem stat: a live load younger than the horizon is
+    never touched.  Matching is anchored to this table's exact
+    ``temp_{flat}_<digits>`` shape; another table's staging (or a user
+    table that merely starts with ``temp_``) never matches."""
     import re
 
     flat = table_name.replace(".", "_")
@@ -279,29 +268,6 @@ def read_table(spark: SparkSession, spec: TableSpec) -> DataFrame:
     return spark.table(spec.name)
 
 
-def analyze_table(
-    spark: SparkSession, name: str, columns: tuple[str, ...] = ()
-) -> None:
-    """Collect catalog statistics: table-level (row count, size) and, when
-    ``columns`` is given, per-column NDV/null/min/max histograms.
-
-    This is the enablement step for Spark's cost-based optimizer: with
-    ``spark.sql.cbo.enabled`` (and ``cbo.joinReorder.enabled``) the
-    analyzed rowCount/NDV drive join reordering and broadcast decisions
-    from CARDINALITY instead of raw file size — the difference between
-    broadcasting a 10 GB table that filters to 1k rows and sort-merging
-    it.  On a 100 TB warehouse this runs as a scheduled post-load step on
-    dimension tables and join keys; it is a scan-only job (no shuffle)
-    whose output lives in the metastore, so the cost is amortized over
-    every subsequent plan."""
-    spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
-    if columns:
-        spark.sql(
-            f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS "
-            + ", ".join(columns)
-        )
-
-
 def save_bucketed(
     spark: SparkSession,
     df: DataFrame,
@@ -361,79 +327,6 @@ def save_clustered(
         .format("parquet")
         .option("compression", "snappy")
         .save(path)
-    )
-
-
-def save_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 12,
-    n_files: int = 16,
-) -> None:
-    """Write parquet clustered on a Z-ORDER (Morton) curve over ``cols`` —
-    multi-dimensional data layout (Delta OPTIMIZE ZORDER BY / Iceberg
-    sort-order analogue), built from plain column expressions.
-
-    ``save_clustered`` prunes ONE dimension perfectly and the others not
-    at all; interleaving the bits of several dimensions gives every
-    dimension locality, so a query filtering on ANY subset of
-    the z-columns skips files/row groups via footer min/max stats.  The
-    classic trade: per-dimension pruning is a bit worse than a dedicated
-    sort, but it works for all of them at once — the right layout when a
-    100 TB table serves both user-keyed and time-keyed scans.
-
-    Mechanics: each column is min/max-normalized (one tiny agg job) onto
-    ``bits``-bit integers JVM-side, bits are interleaved with
-    shift/and/or expressions (whole-stage codegen — no UDF), and the
-    write range-partitions + sorts on the z-value, which is dropped from
-    the stored schema.  Normalization bounds come from the data; persist
-    them beside the table when appending later batches so the curve stays
-    stable.
-    """
-    if bits * len(cols) > 63:
-        raise ValueError(
-            f"bits * len(cols) = {bits * len(cols)} exceeds 63: Spark's "
-            "shiftleft masks shift amounts mod 64, so the interleave would "
-            "silently alias bit positions and the curve would NOT be a "
-            "Morton order — lower bits or split the column set"
-        )
-    bounds = df.agg(
-        *[F.min(c).alias(f"__mn_{c}") for c in cols],
-        *[F.max(c).alias(f"__mx_{c}") for c in cols],
-    ).first()
-    scaled = []
-    for c in cols:
-        mn = bounds[f"__mn_{c}"]
-        mx = bounds[f"__mx_{c}"]
-        span = (
-            (F.lit(mx).cast("double") - F.lit(mn).cast("double"))
-            if mx != mn
-            else F.lit(1.0)
-        )
-        norm = (F.col(c).cast("double") - F.lit(mn).cast("double")) / span
-        scaled.append(
-            F.least(
-                F.floor(norm * F.lit(float(1 << bits))).cast("bigint"),
-                F.lit((1 << bits) - 1),
-            )
-        )
-    z = F.lit(0).cast("bigint")
-    for i in range(bits):
-        for j, s in enumerate(scaled):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(s, i).bitwiseAND(F.lit(1)),
-                    i * len(cols) + j,
-                ).cast("bigint")
-            )
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
     )
 
 

@@ -242,7 +242,8 @@ def ngram_jaccard_pairs(
     another consumer needs it too (the Spark-ML audit lane feeds the same
     relation to ``ml_lsh.ml_minhash_pairs``) — the corpus is then tokenized
     once, not once per side.  Every quantity here depends only on the
-    distinct (doc, sh) content, so the output is bit-identical.
+    distinct (doc, sh) content, so the output is bit-identical.  Any other
+    column layout raises ``ValueError``.
 
     ``prefix_filter=None`` (default) AUTO-SELECTS from the measured shingle
     document-frequency tail: one tiny aggregate over the df relation
@@ -284,6 +285,11 @@ def ngram_jaccard_pairs(
     cannot contribute to any intersection; sizes still come from the full
     relation.
     """
+    if shingles is not None and tuple(shingles.columns) != ("doc", "sh"):
+        raise ValueError(
+            "shingles must be a doc_shingles relation with columns "
+            f"(doc, sh), got {tuple(shingles.columns)}"
+        )
     # Content-class canonicalization (round 6): Jaccard depends only on
     # text, so compute on one representative per distinct content and
     # expand back — bit-identical output, verify cost bounded by DISTINCT
@@ -454,31 +460,13 @@ def minhash_signatures_from_shingles(shingles: DataFrame, k: int = 16) -> DataFr
     return tok.groupBy("doc").agg(*aggs)
 
 
-def banded_signatures(
-    df: DataFrame,
-    col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    bands: int = 8,
-    n: int = 3,
-) -> DataFrame:
-    """(doc, band_idx, band_hash) — MinHash signatures folded into LSH band
-    hashes, stacked long-form.  ONE definition of the banding layout: this
-    relation IS the persisted-index format incremental probes match
-    against, so :func:`minhash_lsh_pairs` (within-corpus) and
-    :func:`incremental_minhash_pairs` (batch-vs-history) must agree on it
-    byte-for-byte — a layout change here re-keys both sides together.
-    """
-    rows = k // bands
-    sigs = minhash_signatures(df, col, id_col, k, n).localCheckpoint(eager=True)
-    return _band_stack(sigs, k, bands)
-
-
 def _band_stack(sigs: DataFrame, k: int, bands: int) -> DataFrame:
-    """Fold sig_0..sig_{k-1} columns into the stacked band relation —
-    shared tail of :func:`banded_signatures` and the shingle-reusing path
-    in :func:`minhash_lsh_pairs`, so the banding layout stays defined in
-    exactly one place."""
+    """(doc, band_idx, band_hash) — sig_0..sig_{k-1} columns folded into
+    LSH band hashes, stacked long-form.  ONE definition of the banding
+    layout: this relation IS the persisted-index format incremental probes
+    match against, so :func:`minhash_lsh_pairs` (within-corpus) and
+    :func:`incremental_minhash_pairs` (batch-vs-history) must agree on it
+    byte-for-byte — a layout change here re-keys both sides together."""
     rows = k // bands
     band_cols = [
         F.md5(

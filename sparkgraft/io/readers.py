@@ -89,14 +89,11 @@ def _evict_stopped_sessions() -> None:
     long-lived process that restarts sessions.  ``SparkContext.stop()``
     nulls ``_jsc`` on the Python wrapper, so the check is a pure-Python
     attribute read (no py4j round-trip); called on cache MISSES only, so
-    the steady-state hit path stays allocation-free."""
-    dead = [
-        k
-        for k, df in _PLAN_CACHE.items()
-        if getattr(df.sparkSession._sc, "_jsc", None) is None
-    ]
-    for k in dead:
-        del _PLAN_CACHE[k]
+    the steady-state hit path stays allocation-free.  Scans a snapshot and
+    pops tolerantly: another driver thread may evict the same entry."""
+    for k, df in list(_PLAN_CACHE.items()):
+        if getattr(df.sparkSession._sc, "_jsc", None) is None:
+            _PLAN_CACHE.pop(k, None)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -33,27 +33,6 @@ def union_all(dfs: Sequence[DataFrame]) -> DataFrame:
     return reduce(DataFrame.union, dfs)
 
 
-def _approx_input_bytes(df: DataFrame) -> int | None:
-    """Sum of the ANALYZED plan's leaf-relation size estimates — the cheap
-    stand-in for "how many scan splits will this subtree get".  Reads only
-    leaf metadata (file-size sums for scans): no catalyst optimization, no
-    physical planning, no plan->RDD conversion, so it stays O(#leaves)
-    driver calls even on a 100 TB-wide plan — the previous
-    ``df.rdd.getNumPartitions()`` probe forced a full second planning pass
-    per call (~70-150 ms here, unbounded at scale).  Unknown-size leaves
-    (e.g. a checkpointed LogicalRDD) report huge defaults, which safely
-    maps to "wide enough, don't repartition"."""
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        # py4j maps the scala BigInt through to a Python int
-        return sum(
-            int(leaves.apply(i).computeStats().sizeInBytes())
-            for i in range(leaves.size())
-        )
-    except Exception:
-        return None
-
-
 def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition to core count — ONLY when the incoming data
     is smaller than one scan split per core.
@@ -64,38 +43,44 @@ def fan_out(df: DataFrame) -> DataFrame:
     the whole stage serializes on one core of a many-core host (measured
     3.4x on repetition_stats at sf0.1).  At production scale the scan
     already carries >= cores splits and this is the identity — the knob
-    stays scale-adaptive rather than tuned for either regime (guide §2.5
-    input-skew note: 'one huge unsplittable file … repartition immediately
-    after the read').  Row content is order-independent downstream
-    (per-row projections or aggregations), so results are unchanged.
-    (Round-robin repartition cannot key on map-typed columns; no current
-    caller passes one.)
+    stays scale-adaptive rather than tuned for either regime.  Row content
+    is order-independent downstream (per-row projections or aggregations),
+    so results are unchanged.  (Round-robin repartition cannot key on
+    map-typed columns; no current caller passes one.)
 
-    The width probe is ``_approx_input_bytes`` (analysis-only, r14): the
-    subtree gets fanned out iff its leaf inputs sum below cores x
-    maxPartitionBytes — the same decision the old partition-count probe
-    made for every current caller (scan-rooted narrow subtrees), without
-    the per-call physical-planning pass.  When leaf stats are unavailable
-    the old RDD probe is the fallback.
+    One rule decides the width: an input that is already a round-robin
+    ``repartition(n)`` with n >= cores is returned as is; otherwise the
+    subtree is fanned out iff the ANALYZED plan's leaf-size estimates sum
+    below cores x ``spark.sql.files.maxPartitionBytes`` (read parsed, so
+    ``128m``-style values work).  The probe reads only leaf metadata
+    (file-size sums for scans): no optimization, no physical planning, so
+    it stays O(#leaves) driver calls on a 100 TB-wide plan.  It does not
+    key on partition counts: AQE coalesces a small join's shuffle to one
+    partition, which is exactly the case to fan out.
+
+    Contract: splittable inputs.  Every caller reads parquet; a huge
+    single-file read in an unsplittable codec is one task whatever this
+    decides, and its leaf size says "wide enough".
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    approx = _approx_input_bytes(df)
-    if approx is not None:
-        try:
-            mpb = int(
-                df.sparkSession.conf.get(
-                    "spark.sql.files.maxPartitionBytes", "134217728"
-                ).lower().rstrip("b")
-            )
-        except ValueError:
-            mpb = 134217728
-        if approx >= target * mpb:
-            return df
-        return df.repartition(target)
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().analyzed()
+    if (
+        plan.getClass().getSimpleName() == "Repartition"
+        and plan.shuffle()
+        and plan.numPartitions() >= target
+    ):
+        return df
+    leaves = plan.collectLeaves()
+    # py4j maps the scala BigInt through to a Python int
+    size = sum(
+        int(leaves.apply(i).computeStats().sizeInBytes())
+        for i in range(leaves.size())
+    )
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if size >= target * split:
+        return df
+    return df.repartition(target)
 
 
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:

@@ -278,24 +278,6 @@ def sessionize_auto(
     )
 
 
-def session_bounds(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    session_col: str = "session_id",
-) -> DataFrame:
-    """One row per session: (user, session, start, end, n_events).
-
-    Single groupBy over the already-sessionized frame; partial aggregation
-    makes this map-side cheap.
-    """
-    return df.groupBy(user_col, session_col).agg(
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
 def carryover_frontier(
     existing: DataFrame,
     boundary_ts,

@@ -11,11 +11,6 @@ from pyspark.sql import Column, functions as F
 RAW_TS_FORMAT = "yyyy-MM-dd HH:mm:ss 'UTC'"
 
 
-def parse_utc_text(col: Column | str, fmt: str = RAW_TS_FORMAT) -> Column:
-    """Text timestamp -> TimestampType (F1)."""
-    return F.to_timestamp(col, fmt)
-
-
 def utc_to_tz(col: Column | str, tz: str = "Asia/Seoul") -> Column:
     """Shift a UTC wall-clock timestamp into a target zone's wall clock (F2).
 
@@ -37,15 +32,3 @@ def local_date(col: Column | str, tz: str = "Asia/Seoul") -> Column:
 def week_start(col: Column | str) -> Column:
     """Monday-start week bucket as DATE (F5: DATE_TRUNC('WEEK', …))."""
     return F.date_trunc("week", F.col(col) if isinstance(col, str) else col).cast("date")
-
-
-def epoch_seconds(col: Column | str) -> Column:
-    """Timestamp -> epoch seconds (F4: unix_timestamp)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_timestamp(c.cast("timestamp"))
-
-
-def epoch_micros(col: Column | str) -> Column:
-    """Timestamp -> epoch microseconds (full precision for ns-derived data)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_micros(c.cast("timestamp"))

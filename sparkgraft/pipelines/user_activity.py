@@ -123,13 +123,10 @@ def normalize(raw: DataFrame) -> DataFrame:
 
 
 def _sessionize_run(
-    spark: SparkSession,
-    run_df: DataFrame,
-    run_start: datetime,
-    spec: catalog.TableSpec = USER_ACTIVITY,
+    existing: DataFrame, run_df: DataFrame, run_start: datetime
 ) -> DataFrame:
-    """Sessionize one consecutive-month run with cross-batch continuity."""
-    existing = catalog.read_table(spark, spec)
+    """Sessionize one consecutive-month run with cross-batch continuity
+    against the ``existing`` table."""
     frontier = carryover_frontier(
         existing,
         run_start,
@@ -149,15 +146,11 @@ def _sessionize_run(
 
 
 def _edge_preserved_rows(
-    spark: SparkSession,
-    utc_start: datetime,
-    utc_end: datetime,
-    spec: catalog.TableSpec = USER_ACTIVITY,
+    existing: DataFrame, utc_start: datetime, utc_end: datetime
 ) -> DataFrame:
     """Existing rows living in the run's edge KST-date partitions but
     OUTSIDE the loaded UTC range — must be rewritten or dynamic overwrite
     deletes them (reference UserActivityHiveConnector.scala:28-42)."""
-    existing = catalog.read_table(spark, spec)
     kst = timedelta(hours=9)
     d_start = (utc_start + kst).date()
     d_end = (utc_end + kst).date()
@@ -179,7 +172,9 @@ def load_months(
     ``spec`` defaults to the reference's curated table; callers needing an
     isolated target (the driver's ETL roundtrip lane, tests) pass a spec
     with the same schema under their own table name."""
-    catalog.ensure_table(spark, spec)
+    # one read serves every run: the table does not change until the
+    # load_overwrite below
+    existing = catalog.read_table(spark, spec)
     if not months:
         return  # empty backfill set: table ensured, nothing to load
     parts: list[DataFrame] = []
@@ -187,10 +182,10 @@ def load_months(
         run_df = normalize(extract_months(spark, raw_dir, run))
         utc_start = month_start(run[0])
         utc_end = month_start(next_month(run[-1]))
-        sessioned = _sessionize_run(spark, run_df, utc_start, spec)
+        sessioned = _sessionize_run(existing, run_df, utc_start)
         parts.append(sessioned.select(*spec.ordered_columns))
         parts.append(
-            _edge_preserved_rows(spark, utc_start, utc_end, spec).select(
+            _edge_preserved_rows(existing, utc_start, utc_end).select(
                 *spec.ordered_columns
             )
         )

@@ -5855,80 +5855,21 @@ def q_snapshot_restore_read(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Driver-window curation.  The external correctness driver snapshots only the
-# FIRST 50 registered queries each round, so registration order is a curated
-# artifact, not an accident of module layout.  Round 14's window, exactly as
-# the r13 verdict staged it (item #9) and the r13 comment spelled out below
-# the r13 window ("ROUND 14 ROTATION"), in three tiers:
-#   (1) first-proof lanes: NONE — round 14 is an optimization round and
-#       registered no new queries (ADDED_AFTER_R14_FREEZE is empty);
-#   (2) stale-refresh re-proofs, oldest first: the 3 remaining round-8
-#       rows (streaming_restart_sessionize, text_repetition,
-#       text_weighted_score), then the alphabetically-first 39 of the 42
-#       round-9 rows (the other 3 — value_zscore_outliers,
-#       wau_sketch_weekly, wau_wow_growth — head round 15's rotation);
-#   (3) the 8 canonical sentinels (same set as r04-r13).
-# No lane's output/domain changed after its newest proof this round (the
-# optimization work is bitwise-audited identical), so the
-# OUTPUT_CHANGED_SINCE_PROOF slice is empty.  After this window lands, NO
-# lane's newest proof is older than ROUND 9.
-# tests/test_registry_parity.py pins the window composition so future
-# insertions can't silently evict proof again.
-#
-# ROUND 15 ROTATION: any query registered after THIS freeze (list it in
-# tests/test_registry_parity.py `ADDED_AFTER_R14_FREEZE` as you add it)
-# first, then any lane whose output/domain changes after its newest
-# proof, then the 3 remaining r09 rows above, then r10 oldest-first to
-# fill, then the 8 sentinels.  Keep new registrations ≤5/round so each
-# window keeps draining the oldest proof tier whole.
+# Driver window.  The external correctness driver snapshots only the FIRST
+# 50 registered queries each round and records them in CORRECTNESS_rNN.json,
+# so registration order decides which lanes get (re-)proven.  The window is
+# computed from those committed proof files:
+#   (1) lanes with no proof row, or listed in OUTPUT_CHANGED_SINCE_PROOF;
+#   (2) the stalest proofs: newest proof round ascending, then name, filling
+#       the window up to the sentinels;
+#   (3) the 8 fixed sentinels.
+# Keep new registrations <= 5 per round so each window still drains the
+# oldest proof tier.
 # ---------------------------------------------------------------------------
 
-DRIVER_WINDOW: tuple[str, ...] = (
-    # tier 2a: the 3 remaining round-8 rows (oldest proofs in the repo)
-    "streaming_restart_sessionize",
-    "text_repetition",
-    "text_weighted_score",
-    # tier 2b: alphabetically-first 39 of the 42 round-9 rows
-    "bitmap_distinct_rollup",
-    "collation_distinct_audit",
-    "column_profile_lineitem",
-    "corpus_chunk_overlap",
-    "corpus_dup_span_fraction",
-    "corpus_shard_assign",
-    "corpus_source_datacard",
-    "corpus_temperature_mix",
-    "corpus_vocab_growth",
-    "custom_stream_jsonl_counts",
-    "dedup_incremental_minhash",
-    "dedup_keep_canonical",
-    "dq_gated_value_rollup",
-    "embed_arrow_norms",
-    "embed_kmeans_clusters",
-    "embed_knn_graph",
-    "embed_pca_projection",
-    "embed_pq_topk",
-    "events_variant_k_stats",
-    "ewma_user_value",
-    "graph_triangle_count",
-    "graph_triangle_lsh",
-    "salted_join_auto",
-    "session_window_stats",
-    "streaming_replay_dedup",
-    "streaming_static_enrich",
-    "streaming_stream_join",
-    "streaming_windowed_counts",
-    "text_bm25_search",
-    "text_fuzzy_probe_match",
-    "text_hybrid_rrf",
-    "text_lm_score",
-    "text_pii_scrub",
-    "timeseries_gapfill",
-    "trade_pagerank",
-    "unpivot_lineitem_measures",
-    "value_histogram",
-    "value_quantiles_approx",
-    "value_time_correlation",
-    # tier 3: the 8 canonical sentinels (same set as r04-r13)
+WINDOW_SIZE = 50
+
+SENTINELS: tuple[str, ...] = (
     "wau_user",
     "sessionize_ids",
     "dedup_minhash_lsh",
@@ -5939,15 +5880,47 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "corpus_e2e_curation",
 )
 
+#: lanes whose OUTPUT or declared domain changed after their newest driver
+#: proof: they take a window slot until a fresh driver row lands.  Add a
+#: name the moment a proven lane's output or domain changes; remove it only
+#: with the new CORRECTNESS row committed.
+OUTPUT_CHANGED_SINCE_PROOF: frozenset[str] = frozenset()
+
+
+def newest_proof_rounds() -> dict[str, int]:
+    """Lane -> newest round with a row in a committed CORRECTNESS_rNN.json."""
+    import json
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    newest: dict[str, int] = {}
+    for f in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name)
+        if m:
+            for n in json.loads(f.read_text()):
+                newest[n] = max(newest.get(n, 0), int(m.group(1)))
+    return newest
+
+
+def _driver_window() -> tuple[str, ...]:
+    newest = newest_proof_rounds()
+    lanes = sorted(n for n in _REGISTRY if n not in SENTINELS)
+    due = [n for n in lanes if n not in newest or n in OUTPUT_CHANGED_SINCE_PROOF]
+    stale = sorted((n for n in lanes if n not in due), key=lambda n: (newest[n], n))
+    fill = WINDOW_SIZE - len(SENTINELS) - len(due)
+    return (*due, *stale[:fill], *SENTINELS)
+
 
 def _apply_driver_window() -> None:
-    missing = [n for n in DRIVER_WINDOW if n not in _REGISTRY]
+    missing = [n for n in SENTINELS if n not in _REGISTRY]
     if missing:
-        raise RuntimeError(f"DRIVER_WINDOW names not registered: {missing}")
+        raise RuntimeError(f"sentinels not registered: {missing}")
     rest = [n for n in _REGISTRY if n not in DRIVER_WINDOW]
     reordered = {n: _REGISTRY[n] for n in (*DRIVER_WINDOW, *rest)}
     _REGISTRY.clear()
     _REGISTRY.update(reordered)
 
 
+DRIVER_WINDOW: tuple[str, ...] = _driver_window()
 _apply_driver_window()

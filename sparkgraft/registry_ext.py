@@ -577,7 +577,7 @@ def q_dedup_incremental_bloom(spark, sf_dir):
 
 def _minhash_oracle_body(cand_pred: str, k: int = 16, bands: int = 8, thr: float = 0.5) -> str:
     """One builder for both MinHash oracles: sig/band/stack construction is
-    the persisted-index layout contract (ext/dedup.banded_signatures), so
+    the persisted-index layout contract (ext/dedup._band_stack), so
     it must exist ONCE on the oracle side too — the within-corpus and
     incremental oracles differ only in the candidate predicate."""
     rows = k // bands

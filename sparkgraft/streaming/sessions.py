@@ -142,72 +142,3 @@ def stateful_sessionize(events: DataFrame, evict_watermark: str | None = None) -
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def tws_sessionize(events: DataFrame) -> DataFrame:
-    """The same per-event sessionizer through the Spark 4
-    ``transformWithStateInPandas`` API (StatefulProcessor + typed
-    ValueState) — the v2 arbitrary-state surface that replaces
-    ``applyInPandasWithState``. Session ids are byte-identical to
-    ``stateful_sessionize`` and to batch ``ops.sessionize``: same
-    deterministic sha2(user#session_start_us) contract.
-
-    State shape is identical (one fixed-size row per user); the v2 API
-    adds composable typed state (value/list/map), timers in event or
-    processing time, and TTL — this operator uses a single ValueState and
-    no timers so the semantics stay exactly the batch oracle's.
-
-    ENV-BLOCKED in this container (same posture as the media codecs): the
-    v2 state server speaks protobuf and ``google.protobuf.descriptor``
-    is not importable here, so the JVM-side pre-init crashes with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE before any user code
-    runs. tests/test_streaming.py::test_tws_sessionize_matches_batch
-    skips on missing protobuf and proves batch-parity when available; no
-    driver query is registered for it.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SessionizeProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("sess", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
-            (user,) = key
-            if self._state.exists():
-                session_start_us, last_ts_us = self._state.get()
-            else:
-                session_start_us, last_ts_us = None, None
-            batch = pd.concat(list(rows), ignore_index=True).sort_values(
-                "ts", kind="mergesort"
-            )
-            ts_us = (
-                batch["ts"].astype("datetime64[ns]").astype("int64") // 1000
-            ).tolist()
-            ids = []
-            for t in ts_us:
-                if last_ts_us is None or t - last_ts_us >= GAP_SECONDS * 1_000_000:
-                    session_start_us = t
-                last_ts_us = t
-                ids.append(_session_id(user, session_start_us))
-            self._state.update((session_start_us, last_ts_us))
-            yield pd.DataFrame(
-                {"user_id": user, "ts": batch["ts"], "session_id": ids}
-            )
-
-        def close(self) -> None:
-            pass
-
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.select("user_id", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SessionizeProcessor(),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )

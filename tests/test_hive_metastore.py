@@ -243,138 +243,6 @@ def test_compact_partitioned_table(spark, sf_dir, tmp_path):
     assert sorted(spark.read.parquet(root).collect()) == before
 
 
-def test_zorder_prunes_both_dimensions(spark, sf_dir, tmp_path):
-    """Z-order layout vs 1-D time clustering, measured by footer min/max
-    stats.  The honest trade the docstring states: a dedicated sort prunes
-    its own dimension best, but gives ZERO pruning on any other; z-order
-    gives every interleaved dimension real locality.  So: a user-range
-    filter must skip nothing under time clustering and most files under
-    z-order; a time-range filter must still prune under z-order (coarser
-    than the dedicated sort — that part is expected and asserted too)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from sparkgraft import catalog
-    from sparkgraft.io.readers import read_table
-
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            "user_id",
-            F.unix_timestamp(F.col("ts").cast("timestamp")).alias("epoch"),
-        )
-    )
-    lo_u, hi_u = 2, 3
-    stats = ev.agg(F.min("epoch"), F.max("epoch")).first()
-    span = stats[1] - stats[0]
-    lo_t, hi_t = stats[0] + span // 3, stats[0] + span // 3 + span // 20
-    n_files = 16
-
-    def touched(path, box):
-        n_total, n_hit = 0, 0
-        for f in os.listdir(path):
-            if not f.endswith(".parquet"):
-                continue
-            n_total += 1
-            md = pq.read_metadata(os.path.join(path, f))
-            names = md.schema.names
-            hit = True
-            for col, lo, hi in box:
-                idx = names.index(col)
-                c_lo = min(
-                    md.row_group(g).column(idx).statistics.min
-                    for g in range(md.num_row_groups)
-                )
-                c_hi = max(
-                    md.row_group(g).column(idx).statistics.max
-                    for g in range(md.num_row_groups)
-                )
-                if c_hi < lo or c_lo > hi:
-                    hit = False
-                    break
-            if hit:
-                n_hit += 1
-        return n_hit, n_total
-
-    p_time = str(tmp_path / "by_time")
-    p_z = str(tmp_path / "by_z")
-    catalog.save_clustered(ev, p_time, "epoch", n_files=n_files)
-    catalog.save_zordered(ev, p_z, ["user_id", "epoch"], bits=12, n_files=n_files)
-
-    # exact round-trip
-    assert sorted(spark.read.parquet(p_z).collect()) == sorted(ev.collect())
-
-    user_box = [("user_id", lo_u, hi_u)]
-    time_box = [("epoch", lo_t, hi_t)]
-    both_box = user_box + time_box
-
-    # user filter: the time sort is blind (touches everything); z-order prunes
-    t_user, t_n = touched(p_time, user_box)
-    z_user, z_n = touched(p_z, user_box)
-    assert t_user == t_n, "time clustering cannot prune a user predicate"
-    assert z_user <= z_n // 2, f"z-order should skip most files: {z_user}/{z_n}"
-
-    # time filter: dedicated sort prunes best; z-order must still prune
-    t_time, _ = touched(p_time, time_box)
-    z_time, _ = touched(p_z, time_box)
-    assert t_time <= z_time, "dedicated sort is the per-dimension optimum"
-    assert z_time < z_n, f"z-order must still prune time: {z_time}/{z_n}"
-
-    # combined box: z-order at least matches its weaker dimension alone
-    z_both, _ = touched(p_z, both_box)
-    assert z_both <= min(z_user, z_time)
-
-
-def test_analyze_table_feeds_cbo_stats(tmp_path):
-    """catalog.analyze_table must land rowCount in the metastore and, with
-    CBO enabled, surface it as the optimized plan's cardinality estimate
-    (the input join reordering / stats-based broadcast decisions read)."""
-    script = textwrap.dedent(
-        """
-        import sys
-        sys.path.insert(0, {repo!r})
-        from sparkgraft.session import get_spark
-        from sparkgraft import catalog
-
-        spark = get_spark("cbo-test", master="local[2]", shuffle_partitions=2,
-                          warehouse_dir={wh!r})
-        spark.range(0, 5000).selectExpr("id", "id % 7 AS k") \\
-             .write.mode("overwrite").saveAsTable("t_cbo")
-        # before ANALYZE: no rowCount in the catalog statistics line
-        pre = spark.sql("DESC EXTENDED t_cbo").filter(
-            "col_name = 'Statistics'").collect()
-        assert not pre or "rows" not in pre[0].data_type, pre
-
-        catalog.analyze_table(spark, "t_cbo", columns=("id", "k"))
-        post = spark.sql("DESC EXTENDED t_cbo").filter(
-            "col_name = 'Statistics'").collect()
-        assert post and "5000 rows" in post[0].data_type, post
-        ndv = spark.sql("DESC EXTENDED t_cbo k").filter(
-            "info_name = 'distinct_count'").collect()
-        assert ndv and int(ndv[0].info_value) == 7, ndv
-
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        stats = spark.table("t_cbo")._jdf.queryExecution() \\
-            .optimizedPlan().stats()
-        assert int(str(stats.rowCount().get())) == 5000, str(stats)
-        print("CBO_OK")
-        spark.stop()
-        """
-    ).format(repo="/root/repo", wh=str(tmp_path / "wh"))
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd=str(tmp_path),
-    )
-    assert "CBO_OK" in proc.stdout, (
-        f"stdout={proc.stdout[-2000:]}\nstderr={proc.stderr[-3000:]}"
-    )
-
-
 def test_fingerprint_invariant_under_compaction_and_reload(spark, sf_dir, tmp_path):
     """The table fingerprint composed with the maintenance ops it exists to
     audit: compact_small_files (50 fragments -> few files) and a repeated

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkgraft.ext import dedup, ml_lsh, simsearch
@@ -57,6 +58,16 @@ def test_shared_shingle_relation_is_bit_identical(spark, sf_dir):
         )
     )
     assert base_ml == shared_ml
+
+
+def test_shared_shingle_relation_must_be_doc_sh(spark, sf_dir):
+    """A shingle relation with columns other than (doc, sh) — here an
+    extra per-occurrence column — is refused: the Jaccard counts assume
+    one row per distinct (doc, sh) and would silently be wrong."""
+    docs = read_table(spark, sf_dir, "documents")
+    ds = dedup.doc_shingles(docs).withColumn("pos", F.lit(0))
+    with pytest.raises(ValueError, match="doc, sh"):
+        dedup.ngram_jaccard_pairs(docs, threshold=0.5, shingles=ds)
 
 
 def test_ml_ann_topk_overlaps_brute_force(spark, sf_dir):

@@ -816,3 +816,60 @@ def test_bucketed_join_no_exchange_below_the_join(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql(f"DROP TABLE IF EXISTS {tl}")
         spark.sql(f"DROP TABLE IF EXISTS {to}")
+
+
+def _docs(spark, sf_dir):
+    from sparkgraft.io.readers import read_table
+
+    return read_table(spark, sf_dir, "documents")
+
+
+def _semi_join(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    return docs.join(docs.select("doc_id").where("doc_id % 2 = 0"), "doc_id", "left_semi")
+
+
+def _explicit_repartition(spark, sf_dir):
+    return _docs(spark, sf_dir).repartition(2 * spark.sparkContext.defaultParallelism)
+
+
+def _split_below_scan(spark, sf_dir):
+    """A suffixed maxPartitionBytes small enough that cores x split is
+    below the documents scan: the scan already has a split per core."""
+    import os
+
+    size = os.path.getsize(f"{sf_dir}/documents.parquet")
+    return f"{size // spark.sparkContext.defaultParallelism // 1024}k"
+
+
+@pytest.mark.parametrize(
+    "build, split, fanned",
+    [
+        (_docs, None, True),
+        (_semi_join, None, True),
+        (_explicit_repartition, None, False),
+        (_docs, _split_below_scan, False),
+    ],
+    ids=["small_scan", "tiny_semi_join", "explicit_repartition", "suffixed_split_size"],
+)
+def test_fan_out_width_rule(spark, sf_dir, build, split, fanned):
+    """fan_out's one rule: spread an input smaller than one split per core
+    to core count; leave alone an explicit repartition to >= cores and an
+    input whose size already gives every core a split (with the split
+    size read as Spark parses it, suffix included)."""
+    from sparkgraft.ops.relational import fan_out
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    if split is not None:
+        spark.conf.set(key, split(spark, sf_dir))
+    try:
+        df = build(spark, sf_dir)
+        out = fan_out(df)
+        if fanned:
+            assert out is not df
+            assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        else:
+            assert out is df
+    finally:
+        spark.conf.set(key, prev)

@@ -57,125 +57,55 @@ def test_readme_count_matches_registry():
 
 
 def test_driver_window_composition():
-    """The correctness driver snapshots only the FIRST 50 registered queries;
-    registration order is a curated artifact (round-2 verdict: two front
-    inserts silently evicted driver-proven queries).  Pin the round-14 window:
-    the first 50 names must be exactly DRIVER_WINDOW, in order.  Queries
-    registered AFTER this freeze fall outside the window by design — they are
-    the round-15 rotation — so this test does NOT claim full cumulative
-    coverage; test_driver_rows_cumulative_coverage computes that claim from
-    the actual CORRECTNESS_r* files instead of asserting it in prose."""
+    """The correctness driver snapshots only the FIRST 50 registered
+    queries, so the first 50 names must be exactly the computed window:
+    50 distinct lanes ending in the sentinels."""
     names = list(registry.queries())
     assert tuple(names[:50]) == registry.DRIVER_WINDOW
     assert len(set(registry.DRIVER_WINDOW)) == 50
-
-
-#: lanes whose OUTPUT or declared domain changed after their newest driver
-#: proof (round-9 advice: enforce the deferral structurally, not in a
-#: comment).  EMPTY at the r14 freeze: round 14 is an optimization round —
-#: every touched lane is bitwise-audited identical, so no output changed.
-#: Add a name here (and give it a window slot) the moment a proven lane's
-#: output or declared domain changes; deleting a name without a fresh driver
-#: row is the silent-stale failure mode this list exists to block.
-OUTPUT_CHANGED_SINCE_PROOF: set[str] = set()
+    assert registry.DRIVER_WINDOW[-len(registry.SENTINELS):] == registry.SENTINELS
 
 
 def test_output_changed_lanes_hold_window_slots():
-    """Round-9 advice item: ten lanes changed output/domain after their
-    newest driver proof and the deferral lived only in a comment.  Enforce
-    it: every output-changed lane must sit in the CURRENT window so the
-    next driver run re-proves the changed output."""
-    missing = OUTPUT_CHANGED_SINCE_PROOF - set(registry.DRIVER_WINDOW)
+    """A lane whose output or domain changed after its newest driver proof
+    must sit in the window, so the next driver run re-proves it."""
+    missing = registry.OUTPUT_CHANGED_SINCE_PROOF - set(registry.DRIVER_WINDOW)
     assert not missing, (
         f"output-changed lanes without a window slot (stale driver rows "
         f"would be silently trusted): {sorted(missing)}"
     )
 
 
-#: queries registered AFTER the r14 window freeze — they cannot hold a
-#: slot in THIS window and head the r15 rotation instead.  EMPTY at the
-#: freeze; list every post-freeze registration here EXPLICITLY so the
-#: exemption is a conscious act, not a silent hole.  Keep in lockstep
-#: across both tests below.
-ADDED_AFTER_R14_FREEZE: set[str] = set()
-
-
 def test_driver_rows_cumulative_coverage():
-    """Every query present at the r14 window freeze must have a driver row
-    in r01..r13 — at this freeze the awaiting set is empty (round 14
-    registered no new queries and the r13 window's two first-proof lanes
-    got their rows in CORRECTNESS_r13).  Queries added after the freeze
-    are exempt (next round's rotation) but must be listed in
-    ADDED_AFTER_R14_FREEZE explicitly."""
-    import json
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    seen: set[str] = set()
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        seen |= set(json.loads(f.read_text()))
+    """Every lane without a row in any committed CORRECTNESS_r*.json holds
+    a window slot: no lane goes unproven."""
+    newest = registry.newest_proof_rounds()
     uncovered = [
         n
         for n in registry.queries()
-        if n not in seen
-        and n not in registry.DRIVER_WINDOW
-        and n not in ADDED_AFTER_R14_FREEZE
+        if n not in newest and n not in registry.DRIVER_WINDOW
     ]
     assert not uncovered, f"queries with no driver row and no window slot: {uncovered}"
 
 
 def test_driver_window_drains_the_backlog():
-    """Round-14 window audit: (a) every registered query either has a prior
-    driver row or a slot in THIS window (no orphans), and (b) no wasted
-    slots — every window slot that re-proves an already-proven query is
-    one of the 8 declared sentinels, an OUTPUT_CHANGED_SINCE_PROOF lane
-    (stale row on a changed output), or a STALE-REFRESH slot whose newest
-    prior row is from round 8 or 9 (the oldest proofs left after r13: the
-    3 r08 overflow rows plus the alphabetically-first 39 of the 42 r09
-    rows refresh here — the other 3 head r15).  `latest` is pinned to the
-    rounds BEFORE this window froze (r01-r13): once the driver emits
-    CORRECTNESS_r14 for the window itself, an open glob would reclassify
-    all 50 slots as re-proofs and fail this test for succeeding."""
-    import json
-    import pathlib
-    import re
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    latest: dict[str, int] = {}
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", f.name).group(1))
-        if rnd > 13:
-            continue  # pinned to the pre-freeze record
-        for n in json.loads(f.read_text()):
-            latest[n] = max(latest.get(n, 0), rnd)
-    sentinels = {
-        "wau_user",
-        "sessionize_ids",
-        "dedup_minhash_lsh",
-        "cumulative_purchases",
-        "value_decile_bins",
-        "window_rank_zoo",
-        "q1_pricing_summary",
-        "corpus_e2e_curation",
-    }
-    for n in registry.DRIVER_WINDOW:
-        if n not in latest:
-            continue  # first driver row — always a justified slot
-        assert (
-            n in sentinels
-            or n in OUTPUT_CHANGED_SINCE_PROOF
-            or latest[n] in (8, 9)
-        ), (
-            f"window slot {n!r} re-proves a query last proven in "
-            f"r{latest[n]:02d} — not a sentinel, not output-changed, not "
-            f"a stale refresh"
-        )
-    never = [
+    """The window re-proves the stalest lanes first: no non-sentinel lane
+    outside the window has an older newest proof than a re-proof slot
+    inside it (a slot that is neither a sentinel, a first proof, nor an
+    output-changed lane)."""
+    newest = registry.newest_proof_rounds()
+    window = set(registry.DRIVER_WINDOW)
+    refresh = [
+        newest[n]
+        for n in window - set(registry.SENTINELS) - registry.OUTPUT_CHANGED_SINCE_PROOF
+        if n in newest
+    ]
+    staler = sorted(
         n
         for n in registry.queries()
-        if n not in latest and n not in ADDED_AFTER_R14_FREEZE
-    ]
-    assert set(never) <= set(registry.DRIVER_WINDOW), (
-        f"queries with no driver row left outside the window: "
-        f"{sorted(set(never) - set(registry.DRIVER_WINDOW))}"
+        if n not in window and refresh and newest.get(n, 0) < max(refresh)
+    )
+    assert not staler, (
+        f"lanes outside the window with older proofs than r{max(refresh):02d}: "
+        f"{staler}"
     )

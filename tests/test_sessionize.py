@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from sparkgraft.ops.sessionize import (
     carryover_frontier,
-    session_bounds,
     sessionize,
     sessionize_with_continuity,
 )
@@ -64,10 +63,9 @@ def test_every_event_has_session_and_counts_match(spark, sf_dir):
     ev = read_table(spark, sf_dir, "events")
     out = sessionize(ev, order_tiebreak=("event_id",))
     assert out.where(F.col("session_id").isNull()).count() == 0
-    # distinct sessions == number of gap-starts
+    # a session id never spans two users
     n_sessions = out.select("session_id").distinct().count()
-    bounds = session_bounds(out)
-    assert bounds.count() == n_sessions
+    assert out.select("user_id", "session_id").distinct().count() == n_sessions
     # sessions never exceed-gap internally: max internal gap < 300s
     w_ok = (
         out.selectExpr(

@@ -158,72 +158,6 @@ def test_evicting_sessionize_matches_batch(spark, tmp_path, batch_df):
     assert got == expected, f"diff={got ^ expected}"
 
 
-def test_tws_sessionize_matches_batch(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas sessionizer == batch sessionization
-    (same contract as the applyInPandasWithState twin). The v2 state API
-    requires google.protobuf, absent in this container — skip there.
-
-    EXACT VERSION GATE (so the next environment bump un-skips this
-    automatically): this PySpark build ships
-    ``pyspark/sql/streaming/proto/StateMessage_pb2.py`` generated by
-    protoc gencode 6.33.0 (PUBLIC domain), whose import-time
-    ``ValidateProtobufRuntimeVersion`` check demands a ``protobuf``
-    runtime >= 6.33 on the same major version.  Installing any protobuf
-    satisfying ``protobuf>=6.33,<7`` makes the import below succeed and
-    the test run; older runtimes (5.x) would fail the generated module's
-    own version validation, not just this guard."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "google.protobuf unavailable (needs protobuf>=6.33,<7 to match "
-            "this PySpark's StateMessage_pb2 gencode): transformWithState "
-            "env-blocked"
-        )
-
-    import os
-
-    from pyspark.sql import functions as F
-
-    from sparkgraft.io.readers import _nanos_fields
-    from sparkgraft.ops.sessionize import sessionize
-    from sparkgraft.streaming.sessions import tws_sessionize
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    os.symlink(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(raw_schema).parquet(src)
-    if "ts" in _nanos_fields(f"{sf_dir}/events.parquet"):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    out = str(tmp_path / "out")
-    q = (
-        tws_sessionize(stream)
-        .writeStream.foreachBatch(lambda df, _id: df.write.mode("append").parquet(out))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    got = {
-        (r.user_id, r.ts): r.session_id
-        for r in spark.read.parquet(out).collect()
-    }
-    from sparkgraft.io.readers import read_table
-
-    batch = {
-        (r.user_id, r.ts): r.session_id
-        for r in sessionize(read_table(spark, sf_dir, "events")).select(
-            "user_id", "ts", "session_id"
-        ).collect()
-    }
-    assert got == batch
-
-
 def test_streaming_bitmap_partials_merge_across_batches(spark, tmp_path):
     """The streaming bitmap MV's core claim: users arriving in DIFFERENT
     micro-batches merge through the OR instead of double-counting.  Feed
