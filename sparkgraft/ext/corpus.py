@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 from sparkgraft.ext.dedup import HASH64_SQL, doc_shingles, shingle_expr
 from sparkgraft.ext.text import _TOKENS_SQL
 from sparkgraft.ext.text import token_count, tokens
+from sparkgraft.ops.materialize import materialize
+from sparkgraft.ops.relational import fan_out
 
 
 def benchmark_shingles(spark, phrases: Sequence[str], n: int = 4) -> DataFrame:
@@ -655,19 +657,16 @@ def exact_dup_spans(
         f" i -> {rolling_span_hash('__th', n, spark_dialect=True)})"
         " ELSE CAST(array() AS ARRAY<BIGINT>) END"
     )
-    from sparkgraft.ops.relational import fan_out
-
     df = fan_out(df)  # tokenize+hash map stage otherwise runs on the scan's split count
     base = df.select(F.col(id_col), F.expr(ntok).cast("bigint").alias("n_tokens"))
-    spans = (
+    # both the corpus-wide frequency pass and the join back read this
+    # relation — materialize it once instead of re-running the
+    # tokenize+md5+rolling-hash map per consumer (and a third time in
+    # the terminal sort's sampling pass)
+    spans = materialize(
         df.withColumn("__th", F.expr(tok_h))
         .select(id_col, F.posexplode(F.expr(hashes)).alias("pos0", "h"))
         .select(id_col, (F.col("pos0") + 1).alias("pos"), "h")
-        # both the corpus-wide frequency pass and the join back read this
-        # relation — materialize it once instead of re-running the
-        # tokenize+md5+rolling-hash map per consumer (and a third time in
-        # the terminal sort's sampling pass)
-        .localCheckpoint(eager=True)
     )
     freq = spans.groupBy("h").agg(F.count(F.lit(1)).alias("c")).where(F.col("c") >= min_count)
     dup = spans.join(freq.select("h"), "h").select(

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from sparkgraft.ext.text import normalize_text, tokens
+from sparkgraft.ops.materialize import materialize
+from sparkgraft.ops.relational import fan_out
 
 #: engine-portable 60-bit hash of a string expression (SQL fragment)
 HASH64_SQL = "CAST(conv(substr(md5({x}), 1, 15), 16, 10) AS BIGINT)"
@@ -99,8 +101,6 @@ def normalized_dup_groups(df: DataFrame, col: str = "text", id_col: str = "doc_i
 
 def doc_shingles(df: DataFrame, col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
     """(doc, shingle) DISTINCT pairs — the shingle-set relation."""
-    from sparkgraft.ops.relational import fan_out
-
     df = fan_out(df)  # tokenize+explode map side otherwise inherits the scan's split count
     return (
         df.select(F.col(id_col).alias("doc"), tokens(col).alias("__toks"))
@@ -238,7 +238,7 @@ def ngram_jaccard_pairs(
     """Near-dup pairs by exact n-gram Jaccard, blocked on shared shingles.
 
     ``shingles``: optional precomputed :func:`doc_shingles`(df, col, id_col,
-    n) relation the CALLER already materialized (localCheckpoint) because
+    n) relation the CALLER already materialized (``materialize``) because
     another consumer needs it too (the Spark-ML audit lane feeds the same
     relation to ``ml_lsh.ml_minhash_pairs``) — the corpus is then tokenized
     once, not once per side.  Every quantity here depends only on the
@@ -303,18 +303,17 @@ def ngram_jaccard_pairs(
 
     # every path reads the shingle relation several times (df stats, freq,
     # blocking/prefix legs, set sizes) — materialize the explode once
-    # instead of re-tokenizing the corpus per leg. (On a real cluster with
-    # executor churn, swap for reliable .checkpoint().)
+    # instead of re-tokenizing the corpus per leg.
     if shingles is not None:
         # caller-materialized relation; under content classes restrict to
         # representative docs — identical to doc_shingles(rep_docs)
         ds = shingles
         if members is not None:
-            ds = shingles.join(
+            ds = materialize(shingles.join(
                 rep_of_cls.select(F.col("rep").alias("doc")), "doc", "left_semi"
-            ).localCheckpoint(eager=True)
+            ))
     else:
-        ds = doc_shingles(df, col, id_col, n).localCheckpoint(eager=True)
+        ds = materialize(doc_shingles(df, col, id_col, n))
     sizes = ds.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
 
     def _maybe_expand(pairs: DataFrame) -> DataFrame:
@@ -627,7 +626,7 @@ def minhash_lsh_pairs(
     # the exact-Jaccard verify anyway) also feeds the signatures — min is
     # distinct-invariant, so the sigs are bit-identical to the fresh-pass
     # form while the corpus is tokenized and md5'd once instead of twice
-    ds = doc_shingles(rep_docs, col, id_col, n).localCheckpoint(eager=True)
+    ds = materialize(doc_shingles(rep_docs, col, id_col, n))
     # no checkpoint on the sigs: both bucket-join legs contain the IDENTICAL
     # agg subtree over the checkpointed ds, so exchange reuse computes it
     # once (measured: a second eager checkpoint here was ~1.2 s SLOWER than
@@ -768,18 +767,16 @@ def connected_components(
         lab2 = hopped.alias("h2").select(
             F.col("h2.node").alias("label"), F.col("h2.label").alias("label2")
         )
-        shortcut = (
+        # materialize TRUNCATES LINEAGE, not just caches: each round's
+        # plan references the previous round's twice (the self-join), so
+        # without truncation the logical plan grows ~4x per round and the
+        # driver OOMs planning round ~15. It is eager, so the round is
+        # stored before the parents are unpersisted.
+        shortcut = materialize(
             hopped.alias("h1")
             .select(F.col("h1.node").alias("node"), F.col("h1.label").alias("label"))
             .join(lab2, "label", "left")
             .select("node", F.least("label", F.coalesce("label2", "label")).alias("label"))
-            # localCheckpoint TRUNCATES LINEAGE, not just caches: each round's
-            # plan references the previous round's twice (the self-join), so
-            # without truncation the logical plan grows ~4x per round and the
-            # driver OOMs planning round ~15. eager=True materializes before
-            # the parents are unpersisted. (On a real cluster with executor
-            # churn, swap for reliable .checkpoint() + setCheckpointDir.)
-            .localCheckpoint(eager=True)
         )
         labels.unpersist()
         hopped.unpersist()
@@ -833,8 +830,6 @@ def simhash_signatures(
     """
     if not (1 <= bits <= 60):
         raise ValueError(f"bits must be in [1, 60] (HASH64 is 60-bit), got {bits}")
-    from sparkgraft.ops.relational import fan_out
-
     df = fan_out(df)  # the explode+md5 map side otherwise runs on the scan's split count
     tok = df.select(F.col(id_col).alias("doc"), F.explode(tokens(col)).alias("tok")).withColumn(
         "h", F.expr(HASH64_SQL.format(x="tok"))
@@ -914,10 +909,9 @@ def simhash_close_pairs(
     # relation from several join legs (value set, two doc probes, same-sig
     # self-join), and without truncating lineage each leg re-runs the token
     # explode + bits-wide groupBy — measured 3.3 s of the 4.5 s sf0.1 bench.
-    # localCheckpoint also lets the auto rule count distinct signatures for
-    # free-ish. (On a real cluster with executor churn, swap for reliable
-    # .checkpoint() + setCheckpointDir.)
-    sigs = simhash_signatures(df, col, id_col, bits).localCheckpoint(eager=True)
+    # Materializing also lets the auto rule count distinct signatures for
+    # free-ish.
+    sigs = materialize(simhash_signatures(df, col, id_col, bits))
     if strategy == "auto":
         if n_masks <= _NEIGHBOR_MASK_LIMIT:
             # ADVICE r2: mask count alone ignores corpus shape — the
@@ -1177,10 +1171,10 @@ def incremental_minhash_pairs(
     # scheduler runs concurrently — the old per-side eager checkpoints
     # serialized them (and each side feeds cand exactly once, so the
     # intermediate materializations bought nothing).
-    ds_b = doc_shingles(batch, col, id_col, n).localCheckpoint(eager=True)
+    ds_b = materialize(doc_shingles(batch, col, id_col, n))
     hs = _band_stack(minhash_signatures(hist, col, id_col, k, n), k, bands)
     bs = _band_stack(minhash_signatures_from_shingles(ds_b, k), k, bands)
-    cand = (
+    cand = materialize(
         bs.select(F.col("doc").alias("doc_b"), "band_idx", "band_hash")
         .join(
             hs.select(F.col("doc").alias("doc_a"), "band_idx", "band_hash"),
@@ -1188,7 +1182,6 @@ def incremental_minhash_pairs(
         )
         .select("doc_a", "doc_b")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # Jaccard verification needs shingles only for history docs that
     # actually candidate — semi-join hist down BEFORE re-shingling, so the
@@ -1204,7 +1197,7 @@ def incremental_minhash_pairs(
         id_col,
         "left_semi",
     )
-    ds_h = doc_shingles(hist_hit, col, id_col, n).localCheckpoint(eager=True)
+    ds_h = materialize(doc_shingles(hist_hit, col, id_col, n))
     sizes_h = ds_h.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     sizes_b = ds_b.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (

@@ -32,6 +32,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
+from sparkgraft.ops.materialize import materialize
+
 #: fixed random hyperplanes (H x dim), seeded — identical literals go into
 #: the Spark plan and the DuckDB oracle. 4 planes = 16 buckets: sized for
 #: the near-random test embeddings (top-neighbor cosine ~0.4-0.5, where
@@ -1270,7 +1272,7 @@ def triangle_counts(e):
             F.when(a_lt_b, F.col("rb")).otherwise(F.col("ra")).alias("rvd"),
         )
     )
-    o = o.localCheckpoint(eager=True)  # referenced by both wedge legs + closure
+    o = materialize(o)  # referenced by both wedge legs + closure
     o1 = o.select(F.col("u"), F.col("v").alias("x"), F.col("rvd").alias("rxd"))
     o2 = o.select(F.col("u"), F.col("v").alias("y"), F.col("rvd").alias("ryd"))
     wedges = o1.join(o2, "u").where(
@@ -1376,7 +1378,7 @@ def lsh_triangle_counts(
     # referenced by degree, orientation, both wedge legs, the closure and
     # the S/Q rollup — checkpoint or the bucket-scoring DAG re-executes
     # per reference (same rationale as the exact lane's edge checkpoint)
-    e = e.localCheckpoint(eager=True)
+    e = materialize(e)
 
     deg = (
         e.select(F.col("ca").alias("node"))
@@ -1398,7 +1400,7 @@ def lsh_triangle_counts(
             F.when(a_lt_b, F.col("mb")).otherwise(F.col("ma")).alias("mv"),
         )
     )
-    o = o.localCheckpoint(eager=True)
+    o = materialize(o)
     o1 = o.select(
         "u",
         "mu",

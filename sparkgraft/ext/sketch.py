@@ -36,6 +36,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from sparkgraft.ops.materialize import materialize
+
 #: grid shape: 3 independent hash rows, 256 buckets each.  With w = 256,
 #: expected overshoot per row is total_mass / 256 spread over colliding
 #: keys; min-of-3 makes a key's estimate exact unless it collides with
@@ -113,12 +115,9 @@ def cm_estimate_audit(
     cached-index lanes use).  Zero joins; grid bit-identical to the
     raw-row build (pinned in tests/test_sketch.py); a first draft used
     three per-row broadcast joins whose unshared subtrees re-scanned the
-    corpus once per hash row.  On a real cluster swap localCheckpoint
-    for reliable .checkpoint(); the key relation is the audit's OUTPUT
+    corpus once per hash row.  The key relation is the audit's OUTPUT
     size, so materializing it is inherent to the relation, not overhead."""
-    exact = df.groupBy(key_col).agg(
-        F.count(F.lit(1)).alias("exact_cnt")
-    ).localCheckpoint(eager=True)
+    exact = materialize(df.groupBy(key_col).agg(F.count(F.lit(1)).alias("exact_cnt")))
     cells = (
         exact.select(
             F.explode(

@@ -20,6 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from sparkgraft.io.readers import read_table
+from sparkgraft.ops.materialize import materialize
 from sparkgraft.ops.relational import exact_sum, left_join, top_k, union_all
 from sparkgraft.ops.sessionize import sessionize, sessionize_skew_split
 from sparkgraft.ops.temporal import local_date
@@ -2415,9 +2416,9 @@ def _window_rank_zoo_relation(spark, sf_dir):
     """Pre-sort relation of q_window_rank_zoo, SHARED with its plan gates
     (tests/test_plans.py) — the gates call THIS builder directly, so any
     edit to the shipped shape is automatically the shape graded (same
-    pattern as _bucketed_join_relation; r14 measured _CKPT_BEFORE_SORT as
+    pattern as _bucketed_join_relation; r14 measured ``sorted_output`` as
     a net LOSS on these lanes — with AQE the sampler re-executes only the
-    cheap post-shuffle tail, while a lazy localCheckpoint forces all
+    cheap post-shuffle tail, while a lazy checkpoint forces all
     query stages eagerly at build plus a block-store copy — so the lanes
     keep the plain terminal sort and the builder split stays for the
     gates' sake)."""
@@ -3588,14 +3589,14 @@ def _trade_pagerank_relation(spark, sf_dir):
             ).alias("rev_cents")
         )
     )
-    edges = rev.select(
+    edges = materialize(rev.select(
         "src",
         "dst",
         (
             F.col("rev_cents").cast("double")
             / F.sum("rev_cents").over(Window.partitionBy("src")).cast("double")
         ).alias("wf"),
-    ).localCheckpoint()
+    ))
     # the checkpoint preserves the build's shuffle partitioning; when the
     # edge relation is small (count is free — it's materialized), collapse
     # it so 10 iterations don't each schedule |shuffle partitions| near-
@@ -3652,7 +3653,7 @@ def q_trade_pagerank(spark, sf_dir):
     are shuffle-order-invariant and 10 iterations stay bit-identical.
 
     Scale: the edge relation (≤|nations|², here ≤625 rows) is built ONCE
-    from the q5-shaped join and localCheckpoint()ed — the big join never
+    from the q5-shaped join and materialized — the big join never
     re-executes across iterations, and lineage stays O(1).  Each iteration
     is one equi-join ranks⋈edges on src + one groupBy dst; on a billion-
     edge graph both shuffle on the same key, so co-partitioning carries
@@ -5329,7 +5330,7 @@ def _value_mad_outliers_relation(spark, sf_dir):
     # med/mad are ~|event_type| rows but their LINEAGE is a full two-level
     # rank — checkpoint so downstream references replay 6 rows, not the
     # rank pipeline (same contract as the triangle edge materialization)
-    med = (
+    med = materialize(
         r1.join(F.broadcast(sizes), "event_type")
         .where(mid)
         .groupBy("event_type")
@@ -5337,7 +5338,6 @@ def _value_mad_outliers_relation(spark, sf_dir):
             F.round(F.avg("value"), 6).alias("med"),
             F.max("__n").cast("bigint").alias("n"),
         )
-        .localCheckpoint(eager=True)
     )
     d = ev.join(F.broadcast(med), "event_type").select(
         "event_type",
@@ -5345,12 +5345,11 @@ def _value_mad_outliers_relation(spark, sf_dir):
         F.abs(F.col("value") - F.col("med")).alias("dev"),
     )
     r2 = scalable_row_number(d, ["event_type"], ["dev", "event_id"], "__rn")
-    mad = (
+    mad = materialize(
         r2.join(F.broadcast(sizes), "event_type")
         .where(mid)
         .groupBy("event_type")
         .agg(F.round(F.avg("dev"), 6).alias("mad"))
-        .localCheckpoint(eager=True)
     )
     o = (
         d.join(F.broadcast(mad), "event_type")
@@ -5494,7 +5493,7 @@ def q_bucketed_join_zero_shuffle(spark, sf_dir):
     here): pay the co-location shuffle once at ingest, never again.
     Broadcast is disabled for the join so the measured plan is the one
     that matters at scale (neither side of a fact-fact join broadcasts);
-    the result is materialized eagerly (localCheckpoint) so the conf
+    the result is materialized eagerly (``materialize``) so the conf
     tweak and the scratch tables never escape this function.  Revenue
     rides the exact integer-cents path, so the 5-row result is
     engine-bit-identical."""
@@ -5506,7 +5505,7 @@ def q_bucketed_join_zero_shuffle(spark, sf_dir):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         j = _bucketed_join_relation(spark, sf_dir, tl, to)
-        return j.localCheckpoint(eager=True)
+        return materialize(j)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql(f"DROP TABLE IF EXISTS {tl}")

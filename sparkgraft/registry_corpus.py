@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from sparkgraft.ext import corpus
 from sparkgraft.io.readers import read_table
+from sparkgraft.ops.materialize import materialize, sorted_output
 from sparkgraft.registry import register
 from sparkgraft.registry_ext import _TOK, _hash64_d, _shingles_d
 
@@ -52,10 +53,10 @@ def q_corpus_decontaminate(spark, sf_dir):
     text (ext/corpus.decontaminate)."""
     docs = _t(spark, sf_dir, "documents")
     bench = corpus.benchmark_shingles(spark, BENCHMARK_PHRASES, n=4)
-    return (
+    return sorted_output(
         corpus.decontaminate(docs, bench, n=4)
-        .select("doc_id", "lang", "source")
-        .localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT (see registry_ext)
+        .select("doc_id", "lang", "source"),
+        "doc_id",
     )
 
 
@@ -122,12 +123,12 @@ def q_corpus_pack_sequences(spark, sf_dir):
     cumsum checks directly."""
     docs = _t(spark, sf_dir, "documents")
     out = corpus.pack_sequences(docs, capacity=256, presplit_chunk=1 << 20)
-    return out.select(
+    return sorted_output(out.select(
         "source",
         "doc_id",
         F.col("n_tokens").cast("bigint").alias("n_tokens"),
         "seq_id",
-    ).localCheckpoint(eager=False).orderBy("source", "doc_id")  # _CKPT_BEFORE_SORT (see registry_ext)
+    ), "source", "doc_id")
 
 
 @register(
@@ -278,7 +279,7 @@ def q_corpus_contamination_score(spark, sf_dir):
     broadcast-probe scale shape."""
     docs = _t(spark, sf_dir, "documents")
     bench = corpus.benchmark_shingles(spark, BENCHMARK_PHRASES, n=4)
-    return corpus.contamination_score(docs, bench, n=4).localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT (see registry_ext)
+    return sorted_output(corpus.contamination_score(docs, bench, n=4), "doc_id")
 
 
 @register(
@@ -395,7 +396,7 @@ def q_ml_minhash_pairs(spark, sf_dir):
     # features all derive from the same materialized (doc, sh) relation.
     # Jaccard and binary HashingTF depend only on the distinct shingle-set
     # content, so both sides are bit-identical to their standalone forms.
-    ds = dedup.doc_shingles(docs).localCheckpoint(eager=True)
+    ds = materialize(dedup.doc_shingles(docs))
     exact = dedup.ngram_jaccard_pairs(docs, threshold=0.5, shingles=ds).select(
         "doc_a", "doc_b", F.lit(1).alias("in_exact")
     )
@@ -534,15 +535,15 @@ def q_corpus_e2e_curation(spark, sf_dir):
         textmod.fingerprint().alias("fp"),
     )
     keep = feats.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    return (
+    return sorted_output(
         feats.join(keep.select("doc_id"), "doc_id", "left_semi")
         .where(
             (F.col("n_tokens") >= 40)
             & (F.col("quality_score") >= 0.3)
             & (F.col("rep_ratio") <= 0.9)
         )
-        .select("doc_id", "n_tokens", "quality_score", "rep_ratio")
-        .localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT (see registry_ext)
+        .select("doc_id", "n_tokens", "quality_score", "rep_ratio"),
+        "doc_id",
     )
 
 

@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 
 from sparkgraft.ext import bpe, dedup, multimodal, simsearch, sketch, text
 from sparkgraft.io.readers import read_table
+from sparkgraft.ops.materialize import materialize, sorted_output
+from sparkgraft.ops.relational import fan_out
 from sparkgraft.registry import register, scratch_dir
 
 # ---------------------------------------------------------------------------
@@ -54,35 +56,6 @@ _SHINGLE_SET_CTES = (
     sizes AS (SELECT doc, count(*) AS n_sh FROM ds GROUP BY doc)
 """
 )
-
-
-#: _CKPT_BEFORE_SORT — why the media-decode lanes insert a LAZY
-#: ``localCheckpoint(eager=False)`` between the decode chain and their
-#: terminal ``orderBy``: a global sort range-partitions its input, and the
-#: RangePartitioner's boundary-sampling pass executes the child once in
-#: full BEFORE the real pass — for an opaque Arrow/Python decode chain
-#: that means every payload is synthesized and decoded TWICE (measured
-#: +1.5 s of the jpeg_rst lane's 2.9 s).  The lazy checkpoint is
-#: materialized by the sampling job itself and reused by the shuffle, so
-#: the chain runs exactly once; row content and final order are
-#: unchanged.  At 100 TB the same rule holds: materialize an expensive
-#: opaque stage before a global sort instead of letting the sampler
-#: recompute it (guide §1.2/§5 — cache only what is reused AND expensive).
-#:
-#: Two scale/shape caveats (r13 verdict item 5; r14 measurements):
-#: - ``localCheckpoint`` blocks are EXECUTOR-LOCAL and non-recoverable —
-#:   on a real cluster with executor churn use the reliable
-#:   ``.checkpoint()`` (these relations are small post-agg/decode
-#:   outputs, so the risk is restart cost, not memory).
-#: - Only worth it when the re-executed subtree is expensive AND
-#:   exchange-free (decode chains). Under AQE the sort sampler re-runs
-#:   only the post-last-shuffle tail, and a lazy localCheckpoint on an
-#:   AQE plan EAGERLY executes every intermediate query stage at build
-#:   plus a block-store copy — a measured net LOSS on join/agg-shaped
-#:   lanes (r14: trade_pagerank 3.54→4.09 s, value_mad 1.87→2.52 s with
-#:   the checkpoint), which is why the six plan-gated lanes do NOT carry
-#:   one.  The surviving shuffle-bearing sites were re-A/B'd and keep a
-#:   small win (text_bigram_lm_score 1.35 vs 1.53 s without).
 
 
 def _t(spark, sf_dir, name):
@@ -531,7 +504,7 @@ def q_dedup_keep_canonical(spark, sf_dir):
     machinery already plan-gated in the cluster query."""
     docs = _t(spark, sf_dir, "documents")
     clusters = dedup.dup_clusters(docs, threshold=0.5)
-    return (
+    return sorted_output(
         docs.select("doc_id")
         .join(clusters, "doc_id", "left")
         .select(
@@ -540,8 +513,8 @@ def q_dedup_keep_canonical(spark, sf_dir):
             (F.coalesce(F.col("cluster_id"), F.col("doc_id")) != F.col("doc_id")).alias(
                 "is_dup"
             ),
-        )
-        .localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT
+        ),
+        "doc_id",
     )
 
 
@@ -908,7 +881,7 @@ def q_embed_semantic_dedup(spark, sf_dir):
     the O(N²/C) embedding-dedup shape for corpus scale.
     Finite-embedding domain declared (simsearch.finite_vectors)."""
     emb = simsearch.finite_vectors(_t(spark, sf_dir, "embeddings"))
-    return simsearch.semantic_dedup(emb, 0.45).localCheckpoint(eager=False).orderBy("vec_id")  # _CKPT_BEFORE_SORT
+    return sorted_output(simsearch.semantic_dedup(emb, 0.45), "vec_id")
 
 
 @register(
@@ -1421,7 +1394,7 @@ def q_multimodal_decode_png(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     payloads = multimodal.synth_png_payloads(docs)
     feats = multimodal.decode_png_features(payloads)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "width",
         "height",
@@ -1430,7 +1403,7 @@ def q_multimodal_decode_png(spark, sf_dir):
         "n_pixels",
         "pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    ), "doc_id")
 
 
 @register(
@@ -1487,17 +1460,11 @@ def q_multimodal_decode_png_palette(spark, sf_dir):
     arithmetic alone — including the palette lookup — and pixels_match
     pins the decoded-RGB md5 against the pre-encode source expansion.
     Scale posture: both stages are per-row-bounded map work over Arrow
-    batches with the deliberate doc_id fan-out repartition of every
-    codec lane (single-file local scans = 1 input partition; at cluster
-    scale the input arrives already partitioned), no driver traffic."""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    batches behind the JPEG lane's doc_id ``fan_out``, no driver traffic."""
+    docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id"))
     payloads = multimodal.synth_png_palette_payloads(docs)
     feats = multimodal.decode_png_features(payloads)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "width",
         "height",
@@ -1506,7 +1473,7 @@ def q_multimodal_decode_png_palette(spark, sf_dir):
         "n_pixels",
         "pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    ), "doc_id")
 
 
 @register(
@@ -1571,14 +1538,10 @@ def q_multimodal_decode_png_adam7(spark, sf_dir):
     breaks the driver hash.  Scale posture: per-row-bounded map work
     over Arrow batches behind the standard codec-lane doc_id fan-out
     repartition, no driver traffic."""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id"))
     payloads = multimodal.synth_png_adam7_payloads(docs)
     feats = multimodal.decode_png_features(payloads, include_interlace=True)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "width",
         "height",
@@ -1588,7 +1551,7 @@ def q_multimodal_decode_png_adam7(spark, sf_dir):
         "n_pixels",
         "pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    ), "doc_id")
 
 
 @register(
@@ -1653,7 +1616,7 @@ def q_multimodal_decode_wav(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     payloads = multimodal.synth_wav_payloads(docs)
     feats = multimodal.decode_wav_features(payloads)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "sample_rate",
         "n_channels",
@@ -1664,7 +1627,7 @@ def q_multimodal_decode_wav(spark, sf_dir):
         "abs_peak",
         "duration_ms",
         (F.col("pcm_md5") == F.col("source_md5")).alias("pcm_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    ), "doc_id")
 
 
 @register(
@@ -1729,7 +1692,7 @@ def q_multimodal_resize_real(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     payloads = multimodal.synth_png_payloads(docs)
     feats = multimodal.resize_png_features(payloads, target_width=8)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "width",
         "height",
@@ -1738,7 +1701,7 @@ def q_multimodal_resize_real(spark, sf_dir):
         "out_pixels",
         "out_pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    ), "doc_id")
 
 
 @register(
@@ -1794,19 +1757,15 @@ def q_multimodal_frames_gif(spark, sf_dir):
     row fan-out factor is the container's frame count.  One deliberate
     exchange (the JPEG lane's rationale): LZW coding is pure-Python work
     and the local single-file corpus scan is ONE input partition, so the
-    bare doc_id column repartitions to the session's parallelism before
-    synth — noise at cluster scale, a ~3x wall win here (6.6 s -> 2.3 s
-    at sf0.1).  (Registered post-r10-freeze: first driver proof lands
+    bare doc_id column is ``fan_out`` to the session's parallelism before
+    synth — the identity at cluster scale, a ~3x wall win here (6.6 s ->
+    2.3 s at sf0.1).  (Registered post-r10-freeze: first driver proof lands
     with the r11 rotation; until then correctness is pinned by the
     pytest roundtrip + oracle-equality tests.)"""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id"))
     payloads = multimodal.synth_gif_payloads(docs)
     frames = multimodal.extract_gif_frames(payloads)
-    return frames.select(
+    return sorted_output(frames.select(
         "doc_id",
         "frame_idx",
         "width",
@@ -1814,7 +1773,7 @@ def q_multimodal_frames_gif(spark, sf_dir):
         "n_frames",
         "pixel_sum",
         (F.col("anim_md5") == F.col("source_md5")).alias("frames_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id", "frame_idx")  # _CKPT_BEFORE_SORT
+    ), "doc_id", "frame_idx")
 
 
 # ---------------------------------------------------------------------------
@@ -1847,7 +1806,7 @@ def q_text_bigram_lm_score(spark, sf_dir):
     bigram counts) — sequence-level fluency signal one rung above the
     unigram score; row-wise pair construction, vocabulary-bounded count
     relations (ext/text.bigram_logprob; parity design in its docstring)."""
-    return text.bigram_logprob(_t(spark, sf_dir, "documents")).localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT
+    return sorted_output(text.bigram_logprob(_t(spark, sf_dir, "documents")), "doc_id")
 
 
 _KNN_CTE_PREFIX = f"""
@@ -1917,7 +1876,7 @@ def q_text_gopher_repetition(spark, sf_dir):
     of n-gram occurrences that repeat — the looping-text filter unigram
     repetition misses. Per-row array expressions, zero shuffle
     (ext/text.gopher_repetition)."""
-    return text.gopher_repetition(_t(spark, sf_dir, "documents")).localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT
+    return sorted_output(text.gopher_repetition(_t(spark, sf_dir, "documents")), "doc_id")
 
 
 @register(
@@ -2402,9 +2361,8 @@ def _graph_triangle_count_relation(spark, sf_dir):
             simsearch.finite_vectors(_t(spark, sf_dir, "embeddings")), k=3
         )
         .select("vec_a", "vec_b")
-        .localCheckpoint(eager=True)
     )
-    return simsearch.triangle_counts(e)
+    return simsearch.triangle_counts(materialize(e))
 
 
 def _lsh_triangle_oracle(tau: float = 0.2) -> str:
@@ -2476,9 +2434,9 @@ def q_graph_triangle_lsh(spark, sf_dir):
     counts expand from per-class closed forms in pure BIGINT arithmetic.
     Deep-decade contract: linear (bench_scale DEEP), vs the exact lane's
     declared quadratic."""
-    return simsearch.lsh_triangle_counts(
+    return sorted_output(simsearch.lsh_triangle_counts(
         simsearch.finite_vectors(_t(spark, sf_dir, "embeddings")), threshold=0.2
-    ).localCheckpoint(eager=False).orderBy("node")  # _CKPT_BEFORE_SORT
+    ), "node")
 
 
 def _pq_oracle(
@@ -2737,7 +2695,7 @@ def q_text_bpe_encode(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     wf = bpe.word_freqs(docs).filter(~F.col("word").rlike("[()]"))
     _, final_seqs = bpe.learn_merges(wf, 4)
-    return bpe.encode_token_counts(docs, final_seqs).localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT
+    return sorted_output(bpe.encode_token_counts(docs, final_seqs), "doc_id")
 
 
 @register(
@@ -2801,7 +2759,7 @@ def q_multimodal_audio_fft(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     payloads = multimodal.synth_tone_wav_payloads(docs)
     feats = multimodal.spectral_features(payloads)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "sample_rate",
         "n_frames",
@@ -2812,7 +2770,7 @@ def q_multimodal_audio_fft(spark, sf_dir):
         "sample_sum",
         "abs_peak",
         (F.col("pcm_md5") == F.col("source_md5")).alias("pcm_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT
+    ), "doc_id")
 
 
 @register(
@@ -2843,7 +2801,7 @@ def q_sketch_count_min_audit(spark, sf_dir):
     one-pass cm_cells path.  (Registered post-r10-freeze: first driver
     proof lands with the r11 rotation.)"""
     events = _t(spark, sf_dir, "events")
-    return sketch.cm_estimate_audit(events, "user_id").localCheckpoint(eager=False).orderBy("user_id")  # _CKPT_BEFORE_SORT
+    return sorted_output(sketch.cm_estimate_audit(events, "user_id"), "user_id")
 
 
 @register(
@@ -2900,28 +2858,23 @@ def q_multimodal_decode_jpeg(spark, sf_dir):
     Scale posture: per-row-bounded map work over Arrow batches, no
     driver traffic.  One deliberate exchange: the Python stages are the
     cost here (pure-Python Huffman coding), and the local corpus is a
-    single parquet file = ONE input partition, so the lane fans the bare
-    doc_id column out to the session's parallelism before synth — at
-    cluster scale the input arrives already partitioned and the
-    repartition of an id column is noise, while here it buys the full
-    32-way Arrow-batch parallelism (measured: 4.8 s -> ~1 s at sf0.1).
+    single parquet file = ONE input partition, so ``fan_out`` spreads the
+    bare doc_id column to the session's parallelism before synth — the
+    identity at cluster scale, the full 32-way Arrow-batch parallelism
+    here (measured: 4.8 s -> ~1 s at sf0.1).
     (Registered post-r10-freeze: first driver proof lands with the r11
     rotation.)"""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id"))
     payloads = multimodal.synth_jpeg_payloads(docs)
     feats = multimodal.decode_jpeg_features(payloads)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "width",
         "height",
         "n_pixels",
         "pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    ), "doc_id")
 
 
 @register(
@@ -2993,19 +2946,14 @@ def q_multimodal_decode_jpeg_color(spark, sf_dir):
     decoded y||cb||cr md5 against the pre-encode source digest.
 
     Scale posture: identical to the gray lane — per-row-bounded Arrow
-    map work, no driver traffic, with the same deliberate doc_id fan-out
-    repartition (single-file local scans = 1 input partition; at cluster
-    scale the input arrives already partitioned).  Color triples the
-    per-row block count — still O(bytes) per row.  (Registered
-    post-r11-freeze: first driver proof lands with the r11 rotation.)"""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    map work, no driver traffic, with the same doc_id ``fan_out``.
+    Color triples the per-row block count — still O(bytes) per row.
+    (Registered post-r11-freeze: first driver proof lands with the r11
+    rotation.)"""
+    docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id"))
     payloads = multimodal.synth_jpeg_color_payloads(docs)
     feats = multimodal.decode_jpeg_color_features(payloads)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "width",
         "height",
@@ -3017,7 +2965,7 @@ def q_multimodal_decode_jpeg_color(spark, sf_dir):
         "g_sum",
         "b_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    ), "doc_id")
 
 
 @register(
@@ -3085,14 +3033,10 @@ def q_multimodal_decode_jpeg_420(spark, sf_dir):
     halves the chroma block count vs 4:4:4, which is the layout's whole
     point at 100 TB of images.  (Registered post-r11-freeze: heads the
     r12 rotation.)"""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id"))
     payloads = multimodal.synth_jpeg_420_payloads(docs)
     feats = multimodal.decode_jpeg_color_features(payloads)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "width",
         "height",
@@ -3104,7 +3048,7 @@ def q_multimodal_decode_jpeg_420(spark, sf_dir):
         "g_sum",
         "b_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    ), "doc_id")
 
 
 @register(
@@ -3181,14 +3125,10 @@ def q_multimodal_decode_jpeg_rst(spark, sf_dir):
     camera corpora carry them; refusing DRI would refuse the dominant
     acquisition path.  (Registered post-r11-freeze: first driver proof
     lands with the r12 rotation.)"""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id"))
     payloads = multimodal.synth_jpeg_rst_payloads(docs)
     feats = multimodal.decode_jpeg_color_features(payloads)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "width",
         "height",
@@ -3201,7 +3141,7 @@ def q_multimodal_decode_jpeg_rst(spark, sf_dir):
         "g_sum",
         "b_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    ), "doc_id")
 
 
 @register(
@@ -3263,14 +3203,10 @@ def q_multimodal_decode_jpeg_prog(spark, sf_dir):
     SOF2 routinely (~10% of web JPEGs); refusing it would refuse that
     slice of the crawl.  (Registered in-round r12: holds a tier-1 slot
     in THIS window.)"""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id"))
     payloads = multimodal.synth_jpeg_prog_payloads(docs)
     feats = multimodal.decode_jpeg_features(payloads)
-    return feats.select(
+    return sorted_output(feats.select(
         "doc_id",
         "width",
         "height",
@@ -3279,7 +3215,7 @@ def q_multimodal_decode_jpeg_prog(spark, sf_dir):
         "n_rst",
         "pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    ), "doc_id")
 
 
 @register(
@@ -3390,9 +3326,9 @@ def q_streaming_count_min(spark, sf_dir):
     )
     for row in merged:
         grid[row["r"]][row["bucket"]] = int(row["mass"])
-    return sketch.audit_against_grid(
+    return sorted_output(sketch.audit_against_grid(
         _t(spark, sf_dir, "events"), "user_id", grid
-    ).localCheckpoint(eager=False).orderBy("user_id")  # _CKPT_BEFORE_SORT
+    ), "user_id")
 
 
 @register(
@@ -3560,9 +3496,9 @@ def q_sketch_hll_linear_audit(spark, sf_dir):
     expression, nothing broadcast, nothing collected.  (Registered
     post-r11-freeze: first driver proof lands with the r11 rotation.)"""
     events = _t(spark, sf_dir, "events")
-    return sketch.hll_lc_multi_probe_audit(
+    return sorted_output(sketch.hll_lc_multi_probe_audit(
         events, _HLL_LC_PROBES
-    ).localCheckpoint(eager=False).orderBy("probe")  # _CKPT_BEFORE_SORT
+    ), "probe")
 
 
 _SKETCH_CACHE_FLAGS = (
@@ -3691,4 +3627,4 @@ def q_sketch_stats_cache_audit(spark, sf_dir):
     out = sketch.audit_against_grid(events, "user_id", cm_cached)
     for name in _SKETCH_CACHE_FLAGS:
         out = out.withColumn(name, F.lit(bool(flags[name])))
-    return out.localCheckpoint(eager=False).orderBy("user_id")  # _CKPT_BEFORE_SORT
+    return sorted_output(out, "user_id")

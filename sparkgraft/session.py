@@ -22,7 +22,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def _default_master() -> str:
@@ -43,7 +43,8 @@ def get_spark(
     ``hive=True`` enables Hive metastore support (embedded Derby locally;
     external metastore on a real cluster) for the catalog layer.
     """
-    builder = SparkSession.builder.appName(app_name).master(master or _default_master())
+    master = master or _default_master()
+    builder = SparkSession.builder.appName(app_name).master(master)
 
     conf = {
         # Determinism / oracle parity
@@ -70,13 +71,10 @@ def get_spark(
     # Scan-split sizing: the default 128 MB split reads each small-to-mid
     # parquet file as ONE task, serializing the scan stage on a many-core
     # local box (measured 2x on the bench set). 8 MB keeps every core fed
-    # locally; on a real cluster raise via env — 128-256 MB amortizes task
+    # locally; a cluster master keeps Spark's 128 MB, which amortizes task
     # overhead at 100 TB where files are properly sized.
-    resolved_master = master or _default_master()
-    if resolved_master.startswith("local"):
-        conf["spark.sql.files.maxPartitionBytes"] = os.environ.get(
-            "SPARK_GRAFT_MAX_PARTITION_BYTES", str(8 * 1024 * 1024)
-        )
+    if master.startswith("local"):
+        conf["spark.sql.files.maxPartitionBytes"] = str(8 * 1024 * 1024)
     if warehouse_dir:
         conf["spark.sql.warehouse.dir"] = warehouse_dir
         # only spark.hadoop.*-prefixed keys reach the Hive/Hadoop config;

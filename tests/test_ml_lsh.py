@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from sparkgraft.ext import dedup, ml_lsh, simsearch
 from sparkgraft.io.readers import read_table
+from sparkgraft.ops.materialize import materialize
 
 
 def test_ml_minhash_recall_vs_exact_jaccard(spark, sf_dir):
@@ -35,7 +36,7 @@ def test_shared_shingle_relation_is_bit_identical(spark, sf_dir):
     exact-Jaccard side and the Spark-ML side.  Both must emit exactly the
     rows their standalone (re-tokenizing) forms emit."""
     docs = read_table(spark, sf_dir, "documents")
-    ds = dedup.doc_shingles(docs).localCheckpoint(eager=True)
+    ds = materialize(dedup.doc_shingles(docs))
 
     base_exact = sorted(
         map(tuple, dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect())

@@ -377,7 +377,7 @@ def test_rolling_7d_no_self_join(spark, sf_dir):
 
 
 def test_trade_pagerank_edges_materialized_once(spark, sf_dir):
-    """The q5-shaped edge build must run ONCE (localCheckpoint): the final
+    """The q5-shaped edge build must run ONCE (materialize): the final
     iterated plan may reference the checkpointed RDD 10 times but must
     never re-scan lineitem, and iteration joins must stay equi-joins."""
     plan = _builder_plan(registry._trade_pagerank_relation, spark, sf_dir)
@@ -774,7 +774,7 @@ def test_mad_outliers_two_level_rank_no_lowcard_window(spark, sf_dir):
     assert not re.search(
         r"windowspecdefinition\(event_type#\d+, (value|dev|event_id)#", plan
     ), plan
-    # both ranks run eagerly at the med/mad localCheckpoints and are
+    # both ranks run eagerly at the med/mad materializations and are
     # lineage-truncated out of this plan (their two-level shape is gated on
     # the same scalable_row_number helper in
     # test_value_median_two_level_rank_no_lowcard_window); what must hold
